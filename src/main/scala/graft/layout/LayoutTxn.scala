@@ -3,7 +3,9 @@ package graft.layout
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType,
+  MapType, StructType}
 
 /** Optimistic-concurrency commit protocol for MAINTAINED hive layouts —
   * the r11 MergeTable CAS discipline extended to the at-rest index layers
@@ -124,12 +126,16 @@ object LayoutTxn {
                                   maps: Map[String, (String, Map[String, Seq[Long]])],
                                   batchId: Long = -1L,
                                   props: Map[String, String] = Map.empty,
-                                  schemas: Map[String, String] = Map.empty) {
+                                  schemas: Map[String, String] = Map.empty,
+                                  commitId: Option[String] = None) {
     // maps: sub -> (partCol, partName -> owning RUN versions, oldest
     // first; one element = the classic replace form, several = append
     // runs a read unions (r18))
-    // schemas: sub -> last committed replacement schema (DDL) — what lets
-    // a sub EMPTIED by deletes still read as a typed empty relation
+    // schemas: sub -> the schema a read of the sub returns (DDL, see
+    // committedSchema) — the user schema of every scan readSnapshot makes,
+    // and what lets a sub EMPTIED by deletes still read as a typed empty
+    // relation
+    // commitId: the random id of the commit that wrote this state
   }
 
   private val PropPrefix = "prop."
@@ -173,7 +179,7 @@ object LayoutTxn {
       Some(VersionState(pr.getProperty("version").toLong,
         Option(pr.getProperty("ts")).map(_.toLong).getOrElse(0L), maps,
         Option(pr.getProperty("batchId")).map(_.toLong).getOrElse(-1L),
-        propsOf(pr), schemas))
+        propsOf(pr), schemas, Option(pr.getProperty("commitId"))))
     }
   }
 
@@ -184,12 +190,19 @@ object LayoutTxn {
     * take one snapshot and use it for both: reading them separately races
     * a concurrent [[rescale-style|commit]] that changes the fact and the
     * partitions together, and a count paired with the other snapshot's
-    * dirs probes partitions that don't exist — silently empty results. */
+    * dirs probes partitions that don't exist — silently empty results.
+    *
+    * `commitId` is the random id the commit that wrote this state drew,
+    * so it names the state even across an in-place rebuild that restarts
+    * the version count — the key for caches of facts derived from a
+    * snapshot. `None` for version 0 and for layouts whose last commit
+    * predates the id: such a snapshot must not be cached. */
   final case class LayoutSnapshot(
       dir: String, version: Long, batchId: Long,
       props: Map[String, String],
       private[layout] val maps: Map[String, (String, Map[String, Seq[Long]])],
-      private[layout] val schemas: Map[String, String] = Map.empty)
+      private[layout] val schemas: Map[String, String] = Map.empty,
+      commitId: Option[String] = None)
 
   /** Capture the current committed snapshot of `dir` in one read. A
     * pre-protocol layout (no version file) snapshots as version 0 with
@@ -199,7 +212,7 @@ object LayoutTxn {
     readState(dir) match {
       case Some(st) =>
         LayoutSnapshot(dir, st.version, st.batchId, st.props, st.maps,
-          st.schemas)
+          st.schemas, st.commitId)
       case None => LayoutSnapshot(dir, 0L, -1L, Map.empty, Map.empty)
     }
 
@@ -280,47 +293,112 @@ object LayoutTxn {
                  only: Option[Set[String]] = None): DataFrame =
     readSnapshot(spark, snapshot(dir), sub, partCol, only)
 
-  /** [[readLayout]] against an already-captured [[LayoutSnapshot]]. */
+  /** [[readLayout]] against an already-captured [[LayoutSnapshot]].
+    *
+    * When the snapshot records the sub's schema (every commit does, see
+    * [[commit]]), each per-owner scan takes its data columns as the user
+    * schema, so building the read launches no parquet schema-inference
+    * job. The partition column is left out of that schema: its values and
+    * type still come from the dir names, so the output schema and plan
+    * are the ones an inferred read gives. A sub with no recorded schema
+    * (version 0, or written before schemas were recorded) infers. */
   def readSnapshot(spark: SparkSession, snap: LayoutSnapshot, sub: String,
                    partCol: String,
                    only: Option[Set[String]] = None): DataFrame = {
     val dir = snap.dir
     val all = resolveSnapshot(snap, sub, partCol)
     val parts = all.filter { case (p, _) => only.forall(_.contains(p)) }
+    val recorded = snap.schemas.get(sub).map(StructType.fromDDL)
+    def scan(base: String, paths: Seq[String]): DataFrame = {
+      val reader = spark.read.option("basePath", base)
+      recorded.fold(reader)(s =>
+          reader.schema(StructType(s.filterNot(_.name == partCol))))
+        .parquet(paths: _*)
+    }
     // one scan per distinct base (root / each owning version dir): the
     // basePath option is what turns the dir name into the partition
     // column, and it must be a parent of every path in its scan
     val byBase = parts.groupBy { case (p, path) =>
       path.stripSuffix("/" + p)
     }.toSeq.sortBy(_._1)
-    val scans = byBase.map { case (base, ps) =>
-      spark.read.option("basePath", base).parquet(ps.map(_._2): _*)
-    }
+    val scans = byBase.map { case (base, ps) => scan(base, ps.map(_._2)) }
     scans.reduceOption(_.unionByName(_)).getOrElse {
-      // nothing survived the restriction: an empty frame, its schema
-      // inferred from any live partition; a sub with NO live partitions
-      // (every doc deleted) reads as a typed empty relation off the
-      // schema its last commit recorded (r18 — before that, an index
-      // emptied by deletes threw UNABLE_TO_INFER_SCHEMA and was wedged
-      // for every later ingest; found by the index fuzz lane). Only a
-      // layout that truly never existed still throws the standard path
-      // error — the honest outcome.
+      // nothing survived the restriction: an empty frame with the schema
+      // of any live partition; a sub with NO live partitions (every doc
+      // deleted) reads as a typed empty relation off the schema its last
+      // commit recorded (r18 — before that, an index emptied by deletes
+      // threw UNABLE_TO_INFER_SCHEMA and was wedged for every later
+      // ingest; found by the index fuzz lane). Only a layout that truly
+      // never existed still throws the standard path error — the honest
+      // outcome.
       all.headOption match {
-        case Some((p, path)) =>
-          spark.read.option("basePath", path.stripSuffix("/" + p))
-            .parquet(path).limit(0)
+        case Some((p, path)) => scan(path.stripSuffix("/" + p), Seq(path)).limit(0)
         case None =>
-          snap.schemas.get(sub) match {
-            case Some(ddl) =>
-              spark.createDataFrame(
-                java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                org.apache.spark.sql.types.StructType.fromDDL(ddl))
+          recorded match {
+            case Some(s) =>
+              spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
             case None =>
               spark.read.parquet(subRoot(Paths.get(dir), sub).toString)
                 .limit(0)
           }
       }
     }
+  }
+
+  /** The schema a read of `g.sub` returns once `g` commits on `parent`,
+    * partition column last — what [[readSnapshot]] reads with, so it
+    * must match what inference would give:
+    *  - data columns: the replacement's, widened as the union of the
+    *    per-owner scans widens them when partitions written earlier stay
+    *    live (an `Int` batch appended to a `Long` index reads as `Long`),
+    *    and nullable throughout, as a file read returns them;
+    *  - the partition column: the type partition discovery gives the dir
+    *    names live after the commit (int, else long, for integral names;
+    *    the replacement's type otherwise). A sub the commit empties keeps
+    *    the type its names had before, so it reads with the same schema
+    *    as before it was emptied. */
+  private def committedSchema(spark: SparkSession, parent: LayoutSnapshot,
+                              g: Group, present: Set[String]): StructType = {
+    val old = resolveSnapshot(parent, g.sub, g.partCol).map(_._1).distinct
+    val kept = if (g.append) old else old.filterNot(g.touched.toSet)
+    val written = StructType(g.replacement.schema.filterNot(_.name == g.partCol))
+    val data = if (kept.isEmpty) written else {
+      def empty(s: StructType) =
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+      val before = StructType(readSnapshot(spark, parent, g.sub, g.partCol)
+        .schema.filterNot(_.name == g.partCol))
+      // rows that cannot union with the live ones fail the commit here,
+      // before the claim, instead of every later read
+      empty(before).unionByName(empty(written), allowMissingColumns = true)
+        .schema
+    }
+    val live = (kept ++ present).distinct
+    val partType = integralPartType(if (live.nonEmpty) live else old, g.partCol)
+      .getOrElse(g.replacement.schema(g.partCol).dataType)
+    nullable(data).asInstanceOf[StructType].add(g.partCol, partType)
+  }
+
+  /** `dt` with every field, element and value nullable. */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** Partition discovery's type for integral dir values: int when every
+    * value fits, else long; `None` for empty or non-integral values. */
+  private def integralPartType(parts: Seq[String], partCol: String)
+      : Option[DataType] = {
+    val vs = parts.map(_.stripPrefix(partCol + "="))
+      .filterNot(_ == "__HIVE_DEFAULT_PARTITION__")
+    def all(parse: String => Any) =
+      vs.nonEmpty && vs.forall(v => scala.util.Try(parse(v)).isSuccess)
+    if (all(Integer.parseInt)) Some(IntegerType)
+    else if (all(java.lang.Long.parseLong)) Some(LongType)
+    else None
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -404,6 +482,7 @@ object LayoutTxn {
     val vp = new Properties()
     vp.setProperty("version", version.toString)
     vp.setProperty("ts", pr.getProperty("ts", "0"))
+    Option(pr.getProperty("commitId")).foreach(vp.setProperty("commitId", _))
     // the recorded batchId is MONOTONE: a non-stream commit (no batchId
     // in its claim) carries the parent's forward, so a replay check can
     // never be defeated by an interleaved batch ingest
@@ -417,11 +496,12 @@ object LayoutTxn {
     (parent.map(_.props).getOrElse(Map.empty) ++ propsOf(pr)).foreach {
       case (k, v) => vp.setProperty(PropPrefix + k, v)
     }
-    // per-sub replacement schemas: parent's carry, this commit's groups
-    // overwrite — what keeps a sub EMPTIED by deletions readable as a
-    // typed empty relation (r18; found by the index fuzz lane: delete
-    // every doc, then the next ingest's probe read threw
-    // UNABLE_TO_INFER_SCHEMA and the index was wedged)
+    // per-sub read schemas: parent's carry, this commit's groups
+    // overwrite — reads take them instead of inferring, and they keep a
+    // sub EMPTIED by deletions readable as a typed empty relation (r18;
+    // found by the index fuzz lane: delete every doc, then the next
+    // ingest's probe read threw UNABLE_TO_INFER_SCHEMA and the index was
+    // wedged)
     val schemas = parent.map(_.schemas).getOrElse(Map.empty) ++
       (0 until nGroups).flatMap { i =>
         Option(pr.getProperty(s"group.$i.schema"))
@@ -527,9 +607,11 @@ object LayoutTxn {
     // (ADVICE r17 low); memoized per canonical dir, probing is not free
     if (probedDirs.add(Paths.get(dir).toAbsolutePath.normalize.toString))
       StoreOps.requireHardLinks(Paths.get(dir), "LayoutTxn commit")
+    val parentSnap = snapshot(dir)
     val pr = new Properties()
     pr.setProperty("version", newV.toString)
     pr.setProperty("stage", stage)
+    pr.setProperty("commitId", java.util.UUID.randomUUID().toString)
     if (batchId >= 0) pr.setProperty("batchId", batchId.toString)
     props.foreach { case (k, v) => pr.setProperty(PropPrefix + k, v) }
     pr.setProperty("ts", System.currentTimeMillis().toString)
@@ -554,12 +636,11 @@ object LayoutTxn {
       pr.setProperty(s"group.$i.sub", g.sub)
       pr.setProperty(s"group.$i.partcol", g.partCol)
       if (g.append) pr.setProperty(s"group.$i.append", "true")
-      // the replacement schema, partition column LAST (hive read order) —
-      // recorded so the sub stays readable as a typed empty relation if
-      // a later commit deletes its last partition
-      pr.setProperty(s"group.$i.schema", org.apache.spark.sql.types.StructType(
-        g.replacement.schema.filterNot(_.name == g.partCol) ++
-          g.replacement.schema.find(_.name == g.partCol)).toDDL)
+      // the sub's read schema, partition column LAST (hive read order):
+      // later reads take it instead of inferring, and a sub emptied by a
+      // later commit still reads as a typed empty relation
+      pr.setProperty(s"group.$i.schema",
+        committedSchema(spark, parentSnap, g, present).toDDL)
       pr.setProperty(s"group.$i.moves",
         g.touched.filter(present.contains).mkString(","))
       pr.setProperty(s"group.$i.dels",

@@ -12,12 +12,15 @@ import graft.text.TextAnalysis
   * task 6: "the index tier has spec coverage but no randomized lane").
   * Each case draws a random interleaving of the full maintenance surface
   * — batch ingest, exactly-once stream ingest (with deliberate replays),
-  * DELETE(ids), RESCALE, COMPACT — against one of the four index
-  * families (LSH / winnow / SimHash / inverted text), tracks the
-  * corpus's logical state in a plain collections MODEL, and at the end
-  * diffs the maintained layout against a FRESH index rebuilt from the
-  * model at the layout's CURRENT partition count: index rows, reverse
-  * map, and (text) doc store must all match exactly.
+  * DELETE(ids), RESCALE, COMPACT, and for the text index a REBUILD in
+  * place (the version count restarts, so caches keyed by version would
+  * serve stale facts; a BM25 search after every op fills them) —
+  * against one of the four index families (LSH / winnow / SimHash /
+  * inverted text), tracks the corpus's logical state in a plain
+  * collections MODEL, and at the end diffs the maintained layout against
+  * a FRESH index rebuilt from the model at the layout's CURRENT partition
+  * count: index rows, reverse map, and (text) doc store and search
+  * results must all match exactly.
   *
   * Case count / seed scale via SPARK_GRAFT_IDXFUZZ_N /
   * SPARK_GRAFT_IDXFUZZ_SEED for the fresh-seed certification runs
@@ -43,6 +46,8 @@ class IndexFuzzSpec extends SparkSpec {
   }
 
   private def df(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+
+  private val searchTerms = Seq("alpha", "eta", "pi")
 
   private def vecOf(rnd: scala.util.Random): Seq[Float] =
     Seq.fill(8)(rnd.nextInt(100) / 10.0f)
@@ -96,6 +101,9 @@ class IndexFuzzSpec extends SparkSpec {
     }
 
     var lastBatch = -1L
+    // the batchId the layout must record: the last stream batch since the
+    // layout was last built whole (a rebuild restarts its version state)
+    var watermark = -1L
     val nOps = 4 + rnd.nextInt(5)
     (0 until nOps).foreach { _ =>
       if (family == 4) rnd.nextInt(4) match {
@@ -111,6 +119,7 @@ class IndexFuzzSpec extends SparkSpec {
           lastBatch += 1
           graft.sim.Similarity.ivfUpsertLayout(spark, dir, cents, vdf(b),
             batchId = lastBatch)
+          watermark = lastBatch
           if (rnd.nextBoolean())
             graft.sim.Similarity.ivfUpsertLayout(spark, dir, cents, vdf(b),
               batchId = lastBatch)
@@ -158,6 +167,7 @@ class IndexFuzzSpec extends SparkSpec {
               "doc_id", col("text"), batchId = lastBatch)
           }
           send()
+          watermark = lastBatch
           if (rnd.nextBoolean()) send() // replay must be a no-op
         case 2 => // delete a random subset of live ids
           val live = model.keys.toSeq.sorted
@@ -195,6 +205,11 @@ class IndexFuzzSpec extends SparkSpec {
               maxOwners = 1 + rnd.nextInt(3), txnGraceMs = 0L)
           }
           ()
+        case 5 if family == 3 && model.nonEmpty && rnd.nextInt(3) == 0 =>
+          // text-only: REBUILD in place from the model
+          TextAnalysis.writeIndexLayout(df(model.toSeq.sortBy(_._1)), "doc_id",
+            col("text"), dir, TextAnalysis.persistedIndexBuckets(dir).get)
+          watermark = -1L
         case 5 if family == 3 => // text-only: REPLACE an existing doc
           val live = model.keys.toSeq.sorted
           if (live.nonEmpty) {
@@ -207,6 +222,8 @@ class IndexFuzzSpec extends SparkSpec {
           }
         case _ => () // dedup families: replace is out of contract
       }
+      if (family == 3 && model.nonEmpty)
+        TextAnalysis.bm25SearchLayout(spark, dir, searchTerms).collect()
     }
 
     // ---- the differential: maintained ≡ rebuilt-from-model -----------
@@ -227,8 +244,8 @@ class IndexFuzzSpec extends SparkSpec {
         if (family == 3) TextAnalysis.readIndexPostings(spark, dir)
         else LayoutTxn.readLayout(spark, dir, "", pc)
       assert(empt.count() === 0L, why)
-      if (lastBatch >= 0)
-        assert(LayoutTxn.lastBatchId(dir) === lastBatch, s"$why (watermark)")
+      if (watermark >= 0)
+        assert(LayoutTxn.lastBatchId(dir) === watermark, s"$why (watermark)")
       return
     }
     family match {
@@ -276,6 +293,16 @@ class IndexFuzzSpec extends SparkSpec {
             col("len").cast("long"), col("dm").cast("long"))
           .as[(Long, Long, Option[Long], Long)].collect().toSet
         assert(store(dir) === store(rebuilt), why)
+        // searches read the memoized tombstones and corpus stats
+        def ranked(x: String) = TextAnalysis.bm25SearchLayout(spark, x,
+          searchTerms).as[(Long, Double)].collect().toMap
+        val (a, b) = (ranked(dir), ranked(rebuilt))
+        assert(a.keySet === b.keySet, s"$why (bm25)")
+        a.foreach { case (k, v) =>
+          assert(math.abs(v - b(k)) < 1e-9, s"$why (bm25 doc $k)") }
+        def matching(x: String) = TextAnalysis.searchIndexLayout(spark, x,
+          searchTerms.take(1)).as[(Long, Long)].collect().toSet
+        assert(matching(dir) === matching(rebuilt), s"$why (search)")
       case 4 =>
         graft.sim.Similarity.writeIvfLayout(
           vdf(vmodel.toSeq.sortBy(_._1)), cents, rebuilt)
@@ -292,8 +319,8 @@ class IndexFuzzSpec extends SparkSpec {
       assert(dm(dir) === dm(rebuilt), s"$why (reverse map)")
     }
     // the replay watermark must reflect every delivered stream batch
-    if (lastBatch >= 0)
-      assert(LayoutTxn.lastBatchId(dir) === lastBatch, s"$why (watermark)")
+    if (watermark >= 0)
+      assert(LayoutTxn.lastBatchId(dir) === watermark, s"$why (watermark)")
   }
 
   test(s"$nCases random maintain-vs-rebuild cases across the four index families") {

@@ -3,7 +3,9 @@ package graft.layout
 import java.nio.file.{Files, Paths}
 import java.util.Properties
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import graft.SparkSpec
 
 /** Commit-protocol contract of [[LayoutTxn]] — the stage / CAS-claim /
@@ -351,5 +353,138 @@ class LayoutTxnSpec extends SparkSpec {
     // the next begin() after grace like any pre-claim death
     assert(LayoutTxn.currentVersion(dir) === 0L)
     assert(!Files.exists(Paths.get(dir, "_layout_commit_v1")))
+  }
+
+  /** Every committed sub of `dir` reads the same with its recorded schema
+    * as with inference: field names, types and order (the partition
+    * column's inferred type included) and rows. A sub with no live
+    * partition reads with the schema it had before it was emptied
+    * (`before`). Returns each sub's schema for the next step. */
+  private def assertSchemaParity(dir: String, step: String,
+                                 before: Map[String, StructType])
+      : Map[String, StructType] = {
+    val snap = LayoutTxn.snapshot(dir)
+    def rowsOf(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    if (snap.maps.isEmpty) assert(snap.schemas.isEmpty) // version 0 infers
+    before ++ snap.maps.toSeq.map { case (sub, (pc, _)) =>
+      assert(snap.schemas.contains(sub), s"$step: '$sub' records no schema")
+      val read = LayoutTxn.readSnapshot(spark, snap, sub, pc)
+      if (LayoutTxn.resolveSnapshot(snap, sub, pc).isEmpty)
+        assert(read.schema === before(sub),
+          s"$step: emptied '$sub' reads with another schema")
+      else {
+        val inferred = LayoutTxn.readSnapshot(spark,
+          snap.copy(schemas = Map.empty), sub, pc)
+        assert(read.schema === inferred.schema, s"$step: '$sub'")
+        assert(rowsOf(read) === rowsOf(inferred), s"$step: '$sub' rows")
+      }
+      sub -> read.schema
+    }
+  }
+
+  /** The subs of `dir` whose partitions are all gone. */
+  private def emptiedSubs(dir: String): Set[String] = {
+    val snap = LayoutTxn.snapshot(dir)
+    snap.maps.collect { case (sub, (_, m)) if m.isEmpty => sub }.toSet
+  }
+
+  test("recorded-schema reads equal inferred reads on the text index: build, upsert, delete, rescale, compact, emptied tombstones and postings") {
+    import graft.text.TextAnalysis
+    val dir = newDir("ltxn_parity_text")
+    val docs = Seq((1L, "spark rows spark spark table"), (2L, "spark rows"),
+      (3L, "disk only here"), (4L, "rare word appears once spark"),
+      (5L, "")).toDF("doc_id", "text")
+    TextAnalysis.writeIndexLayout(docs, "doc_id", col("text"), dir, 4)
+    var seen = assertSchemaParity(dir, "build", Map.empty)
+    TextAnalysis.indexUpsertLayout(spark, dir, Seq((2L, "rows of disk"),
+      (6L, "new spark words")).toDF("doc_id", "text"), "doc_id", col("text"))
+    seen = assertSchemaParity(dir, "upsert", seen)
+    TextAnalysis.indexDeleteLayout(spark, dir, Seq(3L, 5L).toDF("doc_id"),
+      "doc_id")
+    seen = assertSchemaParity(dir, "delete", seen)
+    TextAnalysis.indexRescaleLayout(spark, dir, 3)
+    assert(emptiedSubs(dir) === Set("_tomb"))
+    seen = assertSchemaParity(dir, "rescale", seen)
+    TextAnalysis.indexDeleteLayout(spark, dir, Seq(1L).toDF("doc_id"), "doc_id")
+    seen = assertSchemaParity(dir, "second delete", seen)
+    TextAnalysis.indexCompactLayout(spark, dir, maxOwners = 1, txnGraceMs = 0L)
+    assert(emptiedSubs(dir) === Set("_tomb"))
+    seen = assertSchemaParity(dir, "compact", seen)
+    // emptying the postings through an upsert: its replacement's tb is
+    // bigint (termBucket), the dir names' inferred type is int
+    TextAnalysis.indexUpsertLayout(spark, dir, Seq((2L, ""), (4L, ""),
+      (6L, "")).toDF("doc_id", "text"), "doc_id", col("text"))
+    assert(emptiedSubs(dir) === Set("", "_tomb"))
+    assertSchemaParity(dir, "upsert to empty", seen)
+  }
+
+  test("recorded-schema reads equal inferred reads on an INT-id LSH index, through an emptying delete; a narrower batch keeps the wider type") {
+    import graft.dedup.Dedup
+    val dir = newDir("ltxn_parity_lsh")
+    val docs = Seq(1 -> "alpha beta gamma delta epsilon zeta eta theta",
+      2 -> "alpha beta gamma delta epsilon zeta eta iota",
+      3 -> "one two three four five six seven eight nine")
+      .toDF("doc_id", "text") // IntegerType ids
+    Dedup.writeLshIndex(docs, "doc_id", col("text"), dir, partitions = 4)
+    var seen = assertSchemaParity(dir, "build", Map.empty)
+    Dedup.lshIndexUpsert(spark, dir, Seq(4 -> "one two three four five six seven eight ten")
+      .toDF("doc_id", "text"), "doc_id", col("text"))
+    seen = assertSchemaParity(dir, "upsert", seen)
+    assert(seen("").apply("doc_id").dataType === IntegerType)
+    Dedup.lshIndexDelete(spark, dir, Seq(2).toDF("doc_id"), "doc_id")
+    seen = assertSchemaParity(dir, "delete", seen)
+    Dedup.lshIndexRescale(spark, dir, "doc_id", 3)
+    seen = assertSchemaParity(dir, "rescale", seen)
+    Dedup.lshIndexUpsert(spark, dir, Seq(5 -> "alpha beta gamma delta epsilon zeta eta nu")
+      .toDF("doc_id", "text"), "doc_id", col("text"))
+    Dedup.lshIndexCompact(spark, dir, "doc_id", maxOwners = 1, txnGraceMs = 0L)
+    seen = assertSchemaParity(dir, "compact", seen)
+    assert(seen("").apply("doc_id").dataType === IntegerType)
+    Dedup.lshIndexDelete(spark, dir, Seq(1, 3, 4, 5).toDF("doc_id"), "doc_id")
+    assert(emptiedSubs(dir) === Set("", "_docmap"))
+    assertSchemaParity(dir, "delete all", seen)
+
+    // an INT batch appended to a LONG index: the union of the owners'
+    // scans widens doc_id to long, and so must the recorded schema (an
+    // int user schema cannot read the long files)
+    val wide = newDir("ltxn_parity_lsh_wide")
+    Dedup.writeLshIndex(docs.withColumn("doc_id", col("doc_id").cast("long")),
+      "doc_id", col("text"), wide, partitions = 4)
+    Dedup.lshIndexUpsert(spark, wide, Seq(7 -> "alpha beta gamma delta epsilon zeta eta mu")
+      .toDF("doc_id", "text"), "doc_id", col("text"))
+    val w = assertSchemaParity(wide, "int batch", Map.empty)
+    assert(w("").apply("doc_id").dataType === LongType)
+  }
+
+  test("recorded-schema reads equal inferred reads on the IVF layout: upsert, delete, recluster, compact, emptying delete") {
+    import graft.sim.Similarity
+    val dir = newDir("ltxn_parity_ivf")
+    val cents: Array[Seq[Float]] = Array(Seq(1f, 0f, 0f, 0f),
+      Seq(0f, 1f, 0f, 0f), Seq(0f, 0f, 1f, 0f), Seq(0f, 0f, 0f, 1f))
+    def vecs(rows: (Long, Seq[Float])*) =
+      rows.toDF("vec_id", "embedding").withColumn("label", lit("x"))
+    Similarity.writeIvfLayout(vecs(1L -> Seq(0.9f, 0.1f, 0f, 0f),
+      2L -> Seq(0.1f, 0.9f, 0f, 0f), 3L -> Seq(0f, 0f, 1f, 0.2f),
+      4L -> Seq(0f, 0f, 0.1f, 0.9f)), cents, dir)
+    def parity(step: String, seen: Map[String, StructType]) = {
+      val out = assertSchemaParity(dir, step, seen)
+      out.get("").foreach(s => assert(s("cell").dataType === IntegerType, step))
+      out
+    }
+    var seen = parity("build", Map.empty)
+    Similarity.ivfUpsertLayout(spark, dir, cents, vecs(
+      1L -> Seq(0f, 0f, 0.95f, 0.1f), 5L -> Seq(0.2f, 0.8f, 0f, 0f)))
+    seen = parity("upsert", seen)
+    Similarity.ivfDeleteLayout(spark, dir, Seq(2L).toDF("vec_id"))
+    seen = parity("delete", seen)
+    assert(Similarity.reclusterCells(spark, dir, cells = 2, skewThreshold = 0.0,
+      iters = 2, dims = 4).nonEmpty)
+    seen = parity("recluster", seen)
+    Similarity.ivfDeleteLayout(spark, dir, Seq(3L).toDF("vec_id"))
+    LayoutTxn.compactStale(spark, dir, maxOwners = 1, txnGraceMs = 0L)
+    seen = parity("compact", seen)
+    Similarity.ivfDeleteLayout(spark, dir, Seq(1L, 4L, 5L).toDF("vec_id"))
+    assert(emptiedSubs(dir) === Set(""))
+    parity("delete all", seen)
   }
 }

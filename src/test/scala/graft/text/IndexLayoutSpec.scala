@@ -264,6 +264,36 @@ class IndexLayoutSpec extends SparkSpec {
         .as[(Long, Long, Option[Long])].collect().toSet)
   }
 
+  test("a layout REBUILT IN PLACE never serves the old layout's memoized tombstones or corpus stats") {
+    val d = Files.createTempDirectory("idx_rebuild").toString + "/idx"
+    val base = Seq(
+      (1L, "spark rows spark spark table"),
+      (2L, "spark rows"),
+      (3L, "rare word appears once spark"),
+      (4L, "spark disk only"))
+      .toDF("doc_id", "text")
+    val terms = Seq("spark", "rare")
+    def search(dir: String) = TextAnalysis.searchIndexLayout(spark, dir,
+      Seq("spark")).as[(Long, Long)].collect().toSet
+    def ranked(dir: String) = TextAnalysis.bm25SearchLayout(spark, dir, terms)
+      .as[(Long, Double)].collect().toMap
+    TextAnalysis.writeIndexLayout(base, "doc_id", col("text"), d, buckets = 4)
+    TextAnalysis.indexDeleteLayout(spark, d, Seq(2L).toDF("doc_id"), "doc_id")
+    // memoize v1's facts: doc 2's tombstone, N = 3
+    search(d); ranked(d)
+    // the rebuild restarts the version count, so this delete is v1 again
+    TextAnalysis.writeIndexLayout(base, "doc_id", col("text"), d, buckets = 4)
+    TextAnalysis.indexDeleteLayout(spark, d, Seq(4L).toDF("doc_id"), "doc_id")
+    assert(graft.layout.LayoutTxn.currentVersion(d) === 1L)
+    val fresh = Files.createTempDirectory("idx_rebuild_fresh").toString + "/idx"
+    TextAnalysis.writeIndexLayout(base.filter(col("doc_id") =!= 4L), "doc_id",
+      col("text"), fresh, buckets = 4)
+    assert(search(d) === search(fresh))
+    val (a, b) = (ranked(d), ranked(fresh))
+    assert(a.keySet === b.keySet && a.keySet === Set(1L, 2L, 3L))
+    a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12, s"doc $k") }
+  }
+
   test("a mismatched bucket count is REFUSED loudly on every read/maintain route (layout fact, r17)") {
     val d = Files.createTempDirectory("idx_bkts").toString + "/idx"
     val base = Seq((1L, "alpha beta"), (2L, "gamma delta"))
